@@ -318,35 +318,48 @@ def _perm_coeffs(num_hashes: int, seed: int = 7):
     return a.tolist(), b.tolist()
 
 
+def _minhash_sig_col(hs: str, num_hashes: int = 64, seed: int = 7) -> F.Column:
+    """MinHash signature array<long> of the hash-array column `hs`: per
+    permutation, the min over the array of (pmod(h, p) * a + b) mod p.
+    ONE SQL string (num_hashes Python Columns cost ~0.5 s of py4j on a
+    cold driver); pmod is let-bound once per row, the HOF let-binding
+    idiom (0.77 -> 0.62 s for 5k docs x 52 hashes on a 4-core VM)."""
+    a, b = _perm_coeffs(num_hashes, seed)
+    coeffs = ", ".join(f"named_struct('a', {x}L, 'b', {y}L)" for x, y in zip(a, b))
+    return F.expr(
+        f"transform(array(transform({hs}, h -> pmod(h, {_P}L))), xs -> "
+        f"transform(array({coeffs}), c -> "
+        f"array_min(transform(xs, x -> (x * c.a + c.b) % {_P}L))))[0]"
+    )
+
+
 def minhash_signatures(
     sh: DataFrame, num_hashes: int = 64, seed: int = 7, hash_col: str | None = None
 ) -> DataFrame:
-    """(id, sig array<long>) MinHash signatures over a (id, shingle) frame.
-
-    One shuffle: groupBy(id) with num_hashes min() partial aggregates —
-    map-side combine keeps the shuffle at |ids| x num_hashes, independent
-    of shingle count. Permutations are (a*x + b) mod p over xxhash64.
-
-    The base hash is MATERIALIZED in a projection before the aggregate:
-    referencing the xxhash64 expression inside all num_hashes aggregates
-    would re-evaluate it num_hashes times per row (codegen duplicates
-    subtrees per use — measured 64x hash work without this)."""
-    a, b = _perm_coeffs(num_hashes, seed)
-    # hash_col: caller already materialized xxhash64(shingle) (r6 — the
-    # pair-join path shares one hashed frame); values are identical.
-    base = (
-        F.pmod(F.col(hash_col), F.lit(_P))
-        if hash_col
-        else F.pmod(F.xxhash64("shingle"), F.lit(_P))
+    """(id, sig array<long>) MinHash signatures over a (id, shingle) frame:
+    groupBy(id) collects xxhash64(shingle) (or the caller's materialized
+    `hash_col`), then _minhash_sig_col. Docs without shingles get no row."""
+    h = F.col(hash_col) if hash_col else F.xxhash64("shingle")
+    return (
+        sh.groupBy("id")
+        .agg(F.collect_list(h).alias("hs"))
+        .select("id", _minhash_sig_col("hs", num_hashes, seed).alias("sig"))
     )
-    hashed = sh.select("id", base.alias("__x"))
-    x = F.col("__x")
-    mins = [
-        F.min((x * F.lit(int(a[i])) + F.lit(int(b[i]))) % F.lit(_P)).alias(f"h{i}")
-        for i in range(num_hashes)
-    ]
-    agg = hashed.groupBy("id").agg(*mins)
-    return agg.select("id", F.array(*[f"h{i}" for i in range(num_hashes)]).alias("sig"))
+
+
+def _band_buckets(sigs: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
+    """(id, band, bucket) LSH rows of a (id, sig) frame; bucket =
+    xxhash64 of the band's rows_per_band signature values."""
+    r = rows_per_band
+    return sigs.select(
+        "id",
+        F.explode(
+            F.expr(
+                f"transform(sequence(0, {bands - 1}), b -> struct(b as band, "
+                f"xxhash64(array_join(slice(sig, b * {r} + 1, {r}), '_')) as bucket))"
+            )
+        ).alias("bb"),
+    ).select("id", "bb.band", "bb.bucket")
 
 
 def minhash_lsh_candidates(
@@ -355,15 +368,7 @@ def minhash_lsh_candidates(
     """Band the signature, bucket-join: pairs sharing ANY band bucket.
     (id_a < id_b, distinct). Classic (bands x rows) S-curve tuning."""
     assert bands * rows_per_band <= 10_000
-    banded = sigs.select(
-        "id",
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, {bands - 1}), "
-                f"b -> struct(b as band, xxhash64(array_join(slice(sig, b * {rows_per_band} + 1, {rows_per_band}), '_')) as bucket))"
-            )
-        ).alias("bb"),
-    ).select("id", "bb.band", "bb.bucket")
+    banded = _band_buckets(sigs, bands, rows_per_band)
     a = banded.alias("a")
     b = banded.alias("b")
     return (
@@ -387,40 +392,28 @@ def minhash_dedup_pairs(
     """Full MinHash+LSH pipeline: shingle -> signature -> band candidates
     -> exact-Jaccard verification of candidates only. At corpus scale the
     verification join touches only the candidate pair set, not all pairs.
-    Shingles persist MEMORY_AND_DISK, released at the next tracked-cache
-    query build (operators/caching.py)."""
-    # r6: one hashed-long shingle frame (see _hashed_shingles) feeds
-    # signatures, sizes and verification alike. Partitioned on id: the
-    # signature groupBy(id), the size aggregate and both verification
-    # joins all key on an id — one exchange at cache build serves all.
+    Two frames persist MEMORY_AND_DISK, released at the next tracked-cache
+    query build (operators/caching.py): the hashed shingles, and the
+    per-doc hash arrays with their signatures."""
+    # r6: one hashed-long shingle frame (see _hashed_shingles).
     sh = _hashed_shingles(df, id_col, text_col, n, max_df, part_col="id")
-    # r6 session 3: persist the signature frame — the band self-join's two
-    # sides otherwise each re-evaluate the 64-min aggregate over the
-    # corpus-scale shingle cache (guide §7.2 duplicated subtrees; measured
-    # ~1 s per extra evaluation at sf1.0). |docs| x (num_hashes+1) longs —
-    # bounded like the sh cache, same persist_tracked release discipline.
-    sigs = persist_tracked(minhash_signatures(sh, num_hashes, hash_col="h"))
-    cand = minhash_lsh_candidates(sigs, bands, num_hashes // bands)
-    # r6 verification: per-doc shingle-hash ARRAYS + array_intersect,
-    # replacing the old candidate⋈shingle⋈shingle join chain. The band
-    # screen is recall-oriented — at (bands=32, r=2) a template-heavy
-    # corpus yields ~150x more candidates than final pairs (measured
-    # 405k cand -> 2.6k pairs at sf1.0), so the old verify shuffled
-    # |cand| x avg_doc_size (~21M) rows; here the doc array table is
-    # |docs| rows (bounded by doc length), built WITHOUT an exchange
-    # (the cache is already id-partitioned), and each candidate pair is
-    # verified row-locally. Exact: arrays hold the distinct per-doc hash
-    # set, so size(array_intersect) == the old equi-join inter count and
-    # size(hs) == the old per-doc size aggregate. A band-collision pair
-    # sharing ZERO shingles now scores jaccard 0 instead of vanishing
-    # from the inner join — identical output for any threshold > 0
-    # (every caller uses 0.5-0.7).
-    # persisted for the same reason: aa and bb below otherwise re-run the
-    # collect_list aggregate once per verification join side (measured
-    # base 6.4 / sigs 5.4-6.0 / sigs+arrs 4.4 s best-of-3 at sf1.0).
+    # Per-doc hash ARRAYS and the signatures derived from them row-locally
+    # (the min over the array is the min over the same value set), in ONE
+    # cache: both band self-join sides (the build side broadcasts, so it
+    # is a second evaluation) and both verification joins read it (r6 at
+    # sf1.0: 6.4 s unpinned, 4.4 s pinned).
+    # Verification is row-local array_intersect: the band screen yields
+    # ~150x more candidates than pairs on a template-heavy corpus (405k ->
+    # 2.6k at sf1.0). Exact: arrays hold the distinct per-doc hash set, so
+    # size(array_intersect) == the shared-shingle count. A band-collision
+    # pair sharing zero shingles scores jaccard 0, dropped by any
+    # threshold > 0 (every caller uses 0.5-0.7).
     arrs = persist_tracked(
-        sh.groupBy("id").agg(F.collect_list("h").alias("hs"))
+        sh.groupBy("id")
+        .agg(F.collect_list("h").alias("hs"))
+        .withColumn("sig", _minhash_sig_col("hs", num_hashes))
     )
+    cand = minhash_lsh_candidates(arrs.select("id", "sig"), bands, num_hashes // bands)
     aa = arrs.select(F.col("id").alias("id_a"), F.col("hs").alias("hs_a"))
     bb = arrs.select(F.col("id").alias("id_b"), F.col("hs").alias("hs_b"))
     paired = cand.join(aa, "id_a").join(bb, "id_b")
@@ -569,18 +562,20 @@ def dup_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     keep-one-per-cluster policy (dropping id_b per PAIR mis-handles chains
     a~b~c).
 
-    Iterative min-label propagation WITH pointer jumping (ADVICE r2): each
-    round first takes the min over graph neighbors, then compresses one
-    pointer hop (cluster_id := label(cluster_id)) — label paths halve per
-    round, so convergence is O(log diameter) rounds, not O(diameter), and
-    a 2^20-long templated-doc chain converges inside max_iter=20. Each
-    round's frame is localCheckpoint()ed: at 10^12 scale an unbroken
-    20-round lineage would re-execute the whole chain on any retry and
-    blow up plan compilation. (localCheckpoint blocks are executor-local;
-    a production run on a preemptible cluster should use setCheckpointDir
+    Iterative min-label propagation WITH pointer jumping (ADVICE r2):
+    labels start at least(id, min neighbor id); each round takes the min
+    over graph neighbors' labels, then compresses one pointer hop
+    (cluster_id := label(cluster_id)) — label paths halve per round, so
+    convergence is O(log diameter) rounds, not O(diameter), and a
+    2^20-long templated-doc chain converges inside max_iter=20. Each round's
+    frame is localCheckpoint()ed: at 10^12 scale an unbroken 20-round
+    lineage would re-execute the whole chain on any retry and blow up
+    plan compilation. (localCheckpoint blocks are executor-local; a
+    production run on a preemptible cluster should use setCheckpointDir
     + .checkpoint() for fault-tolerant truncation — same plan otherwise.)
-    The per-round convergence check is ONE scalar count action
-    (documented driver round-trip, bounded by max_iter).
+    Each round is ONE action: its lazy checkpoint materializes inside
+    the round's scalar convergence count (a driver round-trip, bounded by
+    max_iter).
 
     Raises RuntimeError if labels are still changing after max_iter rounds
     (ADVICE r2: silently returning unmerged clusters would make a
@@ -600,12 +595,12 @@ def dup_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     sym = edges.unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    # r6: lazy checkpoint — materializes inside round 1's convergence
-    # count instead of as its own job (one fewer action; same blocks)
+    # seeded with what a first round from cluster_id = id would compute;
+    # lazy checkpoint: materializes inside round 1's convergence count
     labels = (
-        sym.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("cluster_id", F.col("id"))
+        sym.groupBy(F.col("src").alias("id"))
+        .agg(F.min("dst").alias("__m"))
+        .select("id", F.least("id", "__m").alias("cluster_id"))
         .localCheckpoint(eager=False)
     )
     changed = -1
@@ -746,16 +741,7 @@ def incremental_band_screen(
     (survivors, flagged). The probe is an equi-join on (band, bucket) —
     the new batch's bands only; the corpus index streams/co-locates."""
     sh = word_shingles(new_docs, id_col, text_col, n)
-    sigs = minhash_signatures(sh, num_hashes)
-    banded = sigs.select(
-        "id",
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, {bands - 1}), "
-                f"b -> struct(b as band, xxhash64(array_join(slice(sig, b * {num_hashes // bands} + 1, {num_hashes // bands}), '_')) as bucket))"
-            )
-        ).alias("bb"),
-    ).select("id", "bb.band", "bb.bucket")
+    banded = _band_buckets(minhash_signatures(sh, num_hashes), bands, num_hashes // bands)
     flagged_ids = (
         banded.join(band_table, ["band", "bucket"], "left_semi")
         .select(F.col("id").alias(id_col))
@@ -778,15 +764,7 @@ def corpus_band_table(
     artifact incremental_band_screen probes against."""
     sh = word_shingles(docs, id_col, text_col, n)
     sigs = minhash_signatures(sh, num_hashes)
-    r = num_hashes // bands
-    return sigs.select(
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, {bands - 1}), "
-                f"b -> struct(b as band, xxhash64(array_join(slice(sig, b * {r} + 1, {r}), '_')) as bucket))"
-            )
-        ).alias("bb")
-    ).select("bb.band", "bb.bucket").distinct()
+    return _band_buckets(sigs, bands, num_hashes // bands).select("band", "bucket").distinct()
 
 
 # ------------------------------------------------- decontamination screen --

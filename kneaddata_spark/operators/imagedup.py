@@ -97,9 +97,14 @@ def banded_hamming_pairs(
     # re-evaluate `h` — which embeds the Python image/video DECODE stage
     # (guide §7.2 duplicated subtrees; the simhash/minhash persist
     # precedent). |media| x (id, hash) rows, persist_tracked discipline.
+    # A frame the caller already persisted keeps its own storage level
+    # and lifetime, and a second call on the same frame adds no cache.
+    from pyspark import StorageLevel
+
     from .caching import persist_tracked
 
-    h = persist_tracked(h)
+    if h.storageLevel == StorageLevel.NONE:
+        h = persist_tracked(h)
     bands = h.select(
         id_col,
         hash_col,

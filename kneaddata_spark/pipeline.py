@@ -41,12 +41,26 @@ from .functions.text import make_text_features_udf, scrub_col
 from .models import train_langid, train_perplexity
 
 
+_MODEL_BC: dict = {}
+
+
 def broadcast_models(spark: SparkSession):
     """Train (driver-side, deterministic) and broadcast the two scorer
     'databases'. In production these would be loaded from artifacts, not
-    trained inline; the broadcast lifecycle is identical."""
-    sc = spark.sparkContext
-    return sc.broadcast(train_langid()), sc.broadcast(train_perplexity())
+    trained inline; the broadcast lifecycle is identical.
+
+    Memoized per SparkContext, so every caller (run_qc inside
+    run_training_pipeline, the entry-query builders) shares ONE pair:
+    trained once, unpickled once per long-lived worker. Keyed on
+    applicationId, NOT id(sparkContext) — CPython reuses addresses after
+    GC, so an id() key could hand a new context a stopped one's
+    broadcasts."""
+    key = spark.sparkContext.applicationId
+    if key not in _MODEL_BC:
+        sc = spark.sparkContext
+        _MODEL_BC.clear()  # at most one live context per driver process
+        _MODEL_BC[key] = (sc.broadcast(train_langid()), sc.broadcast(train_perplexity()))
+    return _MODEL_BC[key]
 
 
 def bytes_trimmed_col() -> F.Column:
@@ -332,15 +346,20 @@ def run_training_pipeline(
     reference's keep-first-occurrence convention (utilities.py:519-520)
     made transitive (a per-PAIR drop of id_b mangles chains a~b~c).
     Returns stage counters (the READ COUNT ladder)."""
+    from pyspark.sql import Observation
+
     from .operators.dedup import dedup_exact, dup_clusters, minhash_dedup_pairs
     from .operators.setops import anti_join_ids
 
     qc = run_qc(spark, clips, out_dir)
     kept = spark.read.parquet(qc.out_path).where(F.col("status") == "kept").drop("status")
 
+    # stage counters ride the two writes via observe() — no re-read count
+    # jobs (run_qc's READ COUNT convention)
+    obs_uniq, obs_final = Observation("n_exact_unique"), Observation("n_final")
     uniq = dedup_exact(kept, "clip_id", "transcript")
     uniq_path = f"{out_dir}/clips_unique"
-    uniq.write.mode("overwrite").parquet(uniq_path)
+    uniq.observe(obs_uniq, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(uniq_path)
     uniq = spark.read.parquet(uniq_path)
 
     near = minhash_dedup_pairs(
@@ -353,7 +372,7 @@ def run_training_pipeline(
     )
     final = anti_join_ids(uniq, drop_ids, key="clip_id")
     final_path = f"{out_dir}/clips_final"
-    final.write.mode("overwrite").parquet(final_path)
+    final.observe(obs_final, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(final_path)
 
     # the near-dup stage's shingle frame is persisted (operators/caching);
     # the final corpus is on disk, so release it before returning
@@ -362,8 +381,8 @@ def run_training_pipeline(
     release_tracked()
 
     n_kept = int(qc.metrics["n_kept"])
-    n_uniq = spark.read.parquet(uniq_path).count()
-    n_final = spark.read.parquet(final_path).count()
+    n_uniq = int(obs_uniq.get["n"])
+    n_final = int(obs_final.get["n"])
     return {
         "n_rows": int(qc.metrics["n_rows"]),
         "n_kept": n_kept,

@@ -2773,25 +2773,6 @@ def multimodal_features_q(spark, sf):
     return feats.join(frames, "media_id")
 
 
-_MODEL_BC_CACHE: dict = {}
-
-
-def _cached_models(spark):
-    """Per-session broadcast model cache: the driver harness calls each
-    query fresh; re-training + re-broadcasting the two scorer artifacts per
-    call wastes its per-query time budget (VERDICT r2 missing #1)."""
-    # applicationId, NOT id(sparkContext): CPython reuses object addresses
-    # after GC, so an id() key could hand a new session the DESTROYED
-    # broadcasts of a stopped one
-    key = spark.sparkContext.applicationId
-    if key not in _MODEL_BC_CACHE:
-        from ..pipeline import broadcast_models
-
-        _MODEL_BC_CACHE.clear()  # at most one live context in any harness
-        _MODEL_BC_CACHE[key] = broadcast_models(spark)
-    return _MODEL_BC_CACHE[key]
-
-
 @q("qc_stream_counts")
 def qc_stream_counts(spark, sf):
     """Structured Streaming QC demo (rows-only: streaming execution is not
@@ -2806,6 +2787,7 @@ def qc_stream_counts(spark, sf):
     timeout only bounds a wedged stream."""
     import tempfile
 
+    from ..pipeline import broadcast_models
     from ..streaming import stream_qc
     from ..streaming.qc_stream import status_counts
     from ..synth import clips_spark_df
@@ -2813,7 +2795,7 @@ def qc_stream_counts(spark, sf):
     base = tempfile.mkdtemp(prefix="qc_stream_")
     src, out, ckpt = f"{base}/in", f"{base}/out", f"{base}/ckpt"
     clips_spark_df(spark, 120, n_partitions=2).write.mode("overwrite").parquet(src)
-    q = stream_qc(spark, src, out, ckpt, *_cached_models(spark))
+    q = stream_qc(spark, src, out, ckpt, *broadcast_models(spark))
     q.awaitTermination(60)
     if q.isActive:
         # a wedged stream must FAIL loudly, not return partial counts —
@@ -2832,10 +2814,10 @@ def qc_pipeline_clips(spark, sf):
     not ANSI-SQL-expressible; pytest provides the parity gate instead.
     Budget-proofed: 400 clips + cached model broadcasts (sized for the
     driver's per-query gate; bench.py exercises the 40k-clip version)."""
-    from ..pipeline import annotate
+    from ..pipeline import annotate, broadcast_models
 
     clips = _synth_clips(spark, 400)
-    ann = annotate(clips, *_cached_models(spark))
+    ann = annotate(clips, *broadcast_models(spark))
     return (
         ann.select(F.coalesce(F.col("drop_rule"), F.lit("kept")).alias("status"))
         .groupBy("status")
@@ -8170,7 +8152,7 @@ def warc_audio_qc_q(spark, sf):
     per-rule counts and byte-identical payloads vs the same clips fed
     directly). Reference analog: the full fastq-in -> QC -> per-stage
     counts flow (run.py end-to-end)."""
-    from ..pipeline import annotate
+    from ..pipeline import annotate, broadcast_models
     from ..sources.warc import read_warc
 
     d = _warc_audio_dir()
@@ -8186,7 +8168,7 @@ def warc_audio_qc_q(spark, sf):
     clips = audio.join(F.broadcast(cat), "clip_id").select(
         "clip_id", "bytes", "sr_hz", "dur_ms", "codec", "transcript"
     )
-    ann = annotate(clips, *_cached_models(spark))
+    ann = annotate(clips, *broadcast_models(spark))
     return (
         ann.select(F.coalesce(F.col("drop_rule"), F.lit("kept")).alias("status"))
         .groupBy("status")

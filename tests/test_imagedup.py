@@ -83,6 +83,35 @@ def test_image_dup_pairs_matrix(spark):
         image_dhash(d, strict=True).collect()
 
 
+def test_banded_hamming_pairs_called_twice(spark):
+    """banded_hamming_pairs pins an unpersisted input ONCE: a second call
+    on the same frame adds no tracked cache, and a frame the caller
+    persisted keeps its own storage level and is not tracked at all.
+    Every call returns the same pairs."""
+    from pyspark import StorageLevel
+
+    from kneaddata_spark.operators import caching
+    from kneaddata_spark.operators.imagedup import banded_hamming_pairs
+
+    rows = [("x", 0b1011), ("y", 0b1001), ("z", -1), ("w", 0b111 << 40)]
+    want = {("x", "y", 1)}  # every other pair differs in >= 5 bits
+    caching.release_tracked()
+    h = spark.createDataFrame(rows, "media_id string, dhash long")
+    for _ in range(2):
+        got = {tuple(r) for r in banded_hamming_pairs(h, "media_id", "dhash", 3).collect()}
+        assert got == want
+    assert len(caching._LIVE) == 1
+    caching.release_tracked()
+
+    own = spark.createDataFrame(rows, "media_id string, dhash long").persist(StorageLevel.DISK_ONLY)
+    for _ in range(2):
+        got = {tuple(r) for r in banded_hamming_pairs(own, "media_id", "dhash", 3).collect()}
+        assert got == want
+    assert own.storageLevel == StorageLevel.DISK_ONLY
+    assert caching._LIVE == []
+    own.unpersist()
+
+
 def test_image_dup_pairs_pigeonhole_fence():
     with pytest.raises(ValueError):
         image_dup_pairs(None, max_hamming=4)

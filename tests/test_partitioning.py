@@ -131,11 +131,27 @@ def test_clip_fixture_scan_width_matches_session(spark):
     assert clips.count() == 400
 
 
+def _cached_relations(plan: str) -> set[str]:
+    """Distinct cached relations of a formatted plan: explain numbers each
+    plan node object once, so every print of one cache shows the same id
+    on the node directly under its InMemoryRelation."""
+    import re
+
+    lines = plan.splitlines()
+    return {
+        re.search(r"\+- \w[\w ]* \((\d+)\)", lines[i + 1]).group(1)
+        for i, line in enumerate(lines)
+        if re.search(r"\+- InMemoryRelation \(\d+\)$", line)
+    }
+
+
 def test_dup_screens_pin_their_self_join_inputs(spark):
-    """r6 session 3: the signature/array frames feeding both self-join
-    sides are persist_tracked — without the pin each side re-evaluates
-    the corpus-wide aggregate (and, for images, the Python decode). The
-    pin is visible as InMemoryTableScan in the physical plan."""
+    """r6 session 3: the frames feeding both self-join sides are
+    persist_tracked — without the pin each side re-evaluates the
+    corpus-wide aggregate (and, for images, the Python decode). The pin
+    is visible as InMemoryTableScan in the physical plan. MinHash pins
+    exactly two frames — the hashed shingles, and the per-doc hash arrays
+    with the signatures derived from them — and has no 64-min aggregate."""
     from tools.audit_plans import plan_of
     from kneaddata_spark.operators import dedup
     from kneaddata_spark.operators.caching import release_tracked
@@ -144,9 +160,64 @@ def test_dup_screens_pin_their_self_join_inputs(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     release_tracked()
     p = plan_of(dedup.minhash_dedup_pairs(df, "doc_id", "text"))
-    assert "InMemoryTableScan" in p
+    assert len(_cached_relations(p)) == 2, p
+    assert "min(__x" not in p
     release_tracked()
     sigs = dedup.simhash_signatures(df, "doc_id", "text")
     p = plan_of(dedup.simhash_near_dup_pairs(sigs))
     assert "InMemoryTableScan" in p
     release_tracked()
+
+
+def test_minhash_array_signatures_match_python(spark):
+    """minhash_signatures (collect_list + one SQL transform) equals an
+    independent Python MinHash over the same shingle sets, on a seeded
+    corpus with the hot-shingle guard ON: per permutation (a, b) from
+    _perm_coeffs, min over ((xxhash64(s) mod p) * a + b) mod p. A doc
+    shorter than n tokens and a doc whose shingles are all hot have no
+    signature row."""
+    import random
+
+    from kneaddata_spark.operators import dedup
+
+    rng = random.Random(11)
+    vocab = [f"w{i}" for i in range(40)]
+    rows = [(i, " ".join(rng.choice(vocab) for _ in range(rng.randint(3, 30)))) for i in range(40)]
+    rows += [(100 + i, "hot shingle text here") for i in range(4)]  # df 4 > max_df
+    rows += [(200, "Too Short")]
+    n, max_df, num_hashes = 3, 3, 16
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+
+    shingles = {}
+    for i, t in rows:
+        toks = t.lower().split()
+        shingles[i] = {" ".join(toks[k : k + n]) for k in range(len(toks) - n + 1)}
+    doc_freq = {}
+    for sh in shingles.values():
+        for s in sh:
+            doc_freq[s] = doc_freq.get(s, 0) + 1
+    kept = {i: {s for s in sh if doc_freq[s] <= max_df} for i, sh in shingles.items()}
+    kept = {i: sh for i, sh in kept.items() if sh}
+    assert 200 not in kept and not any(100 + i in kept for i in range(4))
+
+    # the base hash is Spark's xxhash64 of each shingle string; everything
+    # after it is recomputed here
+    all_sh = sorted({s for sh in kept.values() for s in sh})
+    base = dict(
+        spark.createDataFrame([(s,) for s in all_sh], "s string")
+        .select("s", F.xxhash64("s").alias("h"))
+        .collect()
+    )
+    p = (1 << 31) - 1
+    a, b = dedup._perm_coeffs(num_hashes)
+    want = {
+        i: [min(((base[s] % p) * a[k] + b[k]) % p for s in sh) for k in range(num_hashes)]
+        for i, sh in kept.items()
+    }
+
+    sh_frame = dedup.word_shingles(df, "doc_id", "text", n, max_df=max_df)
+    got = {
+        r["id"]: list(r["sig"])
+        for r in dedup.minhash_signatures(sh_frame, num_hashes).collect()
+    }
+    assert got == want

@@ -200,11 +200,10 @@ def test_warc_audio_qc_transport_is_lossless(spark):
     import pandas as pd
     from pyspark.sql import functions as F
 
-    from kneaddata_spark.pipeline import annotate
+    from kneaddata_spark.pipeline import annotate, broadcast_models
     from kneaddata_spark.plans.entry_queries import (
         QUERIES,
         _WARC_AUDIO_N,
-        _cached_models,
         _warc_audio_dir,
     )
     from kneaddata_spark.sources.warc import read_warc
@@ -217,7 +216,7 @@ def test_warc_audio_qc_transport_is_lossless(spark):
 
     direct_pdf = gen_clips_pdf(_WARC_AUDIO_N)
     direct = annotate(
-        spark.createDataFrame(direct_pdf), *_cached_models(spark)
+        spark.createDataFrame(direct_pdf), *broadcast_models(spark)
     ).select(F.coalesce(F.col("drop_rule"), F.lit("kept")).alias("status"))
     want = {
         r["status"]: r["n"]

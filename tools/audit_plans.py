@@ -22,7 +22,11 @@ AUDIT = [
     ("intersect_kway", {"broadcast_join": True}),
     ("pair_policy_strict", {"max_exchanges": 2}),
     ("dedup_exact", {}),
-    ("minhash_dedup_pairs", {}),
+    # the hashed shingle cache's id repartition, the df-guard count and
+    # its corpus-size count, the per-doc hash-array aggregate and the
+    # candidate distinct (the band self-join broadcasts at this size);
+    # signatures derive row-locally from the hash arrays
+    ("minhash_dedup_pairs", {"max_exchanges": 5}),
     ("cosine_topk", {"broadcast_join": True}),
     ("token_stats", {"max_exchanges": 0}),
     ("scrub_pii", {"max_exchanges": 0, "no_python": True}),
