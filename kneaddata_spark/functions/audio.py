@@ -27,6 +27,7 @@ loop-based, float) — parity between the two is what the tests measure.
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass
 from typing import Callable
 
@@ -35,6 +36,7 @@ import pandas as pd
 import pyarrow as pa
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from .. import rules
 
@@ -393,6 +395,86 @@ def _binary_bounds(arr: pa.Array) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
         else np.zeros(1, dtype=np.uint8)
     )
     return data, starts, ends
+
+
+def _decode_s16(data: np.ndarray, s: int, e: int, codec: str) -> "np.ndarray | None":
+    """Row decode against the shared uint8 buffer -> int16 samples, or None.
+    Same codec registry and structural gates as the QC kernel
+    (audio_features_core); pcm_u8 maps to the int16 domain as
+    (x - 128) << 8 so one quantization rule covers all codecs. Never
+    returns an empty array: every zero-sample payload is None."""
+    spec = CODECS.get(codec)
+    nb = e - s
+    if spec is None or nb <= 0:
+        return None
+    if spec.kind == "pcm_s16":
+        if nb % 2:
+            return None
+        return np.frombuffer(data[s:e].tobytes(), dtype="<i2")
+    if spec.kind == "pcm_u8":
+        return (data[s:e].astype(np.int16) - 128) << 8
+    if spec.kind == "container_s16":
+        if nb < 8 or data[s : s + 4].tobytes() != spec.magic:
+            return None
+        plen = int.from_bytes(data[s + 4 : s + 8].tobytes(), "little")
+        if plen != nb - 8 or plen % 2 or plen == 0:
+            return None
+        return np.frombuffer(data[s + 8 : e].tobytes(), dtype="<i2")
+    # kind == "python": registered real decoder (e.g. WAV RIFF walk)
+    pcm = spec.decode(bytes(data[s:e]))
+    if pcm is None or pcm.dtype != np.int16 or len(pcm) == 0:
+        return None
+    return pcm
+
+
+def with_sr(kernel: Callable) -> Callable:
+    """Sample-rate guard for decoded_udf kernels whose first extra column
+    is the clip's sample rate: a missing or non-positive rate gives a
+    null row, otherwise kernel(x, int(sr), *rest)."""
+
+    @functools.wraps(kernel)
+    def guarded(x, sr, *rest):
+        if not sr or sr <= 0:
+            return None
+        return kernel(x, int(sr), *rest)
+
+    return guarded
+
+
+def decoded_udf(return_type: T.DataType, kernel: Callable):
+    """The Arrow UDF boundary shared by every per-clip decode operator.
+
+    Returns an Arrow UDF called as udf(bytes, codec, *extra_cols). Each
+    payload is read zero-copy from the Arrow buffers and decoded through
+    the codec registry (_decode_s16); an undecodable row is null and the
+    kernel is not called. Otherwise kernel(x, *extras) gets the int16
+    samples and the row's extra column values and returns the row's
+    value: a tuple in field order, a dict or list, or None. The Arrow
+    return type is derived from the one Spark type; the UDF carries the
+    kernel's name in plans.
+
+    The kernels ARE deterministic; the nondeterministic flag exists
+    purely to stop Catalyst from duplicating the expensive decode:
+    InferFiltersFromGenerate derives e.g. `isnotnull(sig) AND size(sig)
+    > 0` from a downstream posexplode and pushes it below the
+    projection, re-evaluating the UDF once for the filter and once for
+    the output (observed: two ArrowEvalPython stages, decode cost 2x).
+    Marking it non-deterministic pins evaluation to exactly one stage;
+    retries stay safe because the function is in fact a pure function
+    of its inputs."""
+    pa_type = to_arrow_type(return_type)
+
+    def udf(raw: pa.Array, codec: pa.Array, *extra: pa.Array) -> pa.Array:
+        data, starts, ends = _binary_bounds(raw)
+        cols = [c.to_pylist() for c in extra]
+        out = []
+        for i, c in enumerate(codec.to_pylist()):
+            x = _decode_s16(data, int(starts[i]), int(ends[i]), c)
+            out.append(None if x is None else kernel(x, *(col[i] for col in cols)))
+        return pa.array(out, type=pa_type)
+
+    udf.__name__ = kernel.__name__
+    return F.arrow_udf(udf, return_type).asNondeterministic()
 
 
 @F.arrow_udf(AUDIO_STRUCT)

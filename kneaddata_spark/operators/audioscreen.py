@@ -8,18 +8,19 @@ effective bandwidth, decay tail, loudness range, digital dropouts,
 impulsive clicks — must not decode the corpus nine times.
 Decode is the per-core Python ceiling (BASELINE.md roofline), and at
 100 TB the bytes-column scan itself is the other ceiling; running the
-standalone operators back-to-back pays both seven times. This stage runs
-the SAME kernels (operators/vad.segment_samples, operators/snr.snr_of,
-operators/pitch.pitch_of, operators/hum.hum_of, operators/bandwidth.
-band_of, operators/reverb.reverb_of, operators/dynrange.dr_of,
-operators/dropout.dropout_of, operators/click.click_of — one
-source of truth each, all replica-gated in their own tests) on one decoded buffer inside ONE
-ArrowEvalPython stage.
+nine standalone operators back-to-back pays both nine times. This stage
+runs the SAME kernels (operators/vad.segment_samples, operators/snr.
+snr_of, operators/pitch.pitch_of, operators/hum.hum_of,
+operators/bandwidth.band_of, operators/reverb.reverb_of,
+operators/dynrange.dr_of, operators/dropout.dropout_of,
+operators/click.click_of — one source of truth each, all replica-gated
+in their own tests) on one decoded buffer inside ONE ArrowEvalPython
+stage, and applies each standalone screen's own verdict function.
 
 Fusion contract (pytest-enforced): every output column is bit-identical
 to the corresponding standalone operator's column — fusing costs
-nothing, choosing it saves two scans and two decodes. Cost honesty, as
-recorded for prep_audio: with this sandbox's memcpy-cheap codecs the
+nothing, choosing it saves eight scans and eight decodes. Cost honesty,
+as recorded for prep_audio: with the built-in memcpy-cheap codecs the
 wall saving is noise-level; the structural saving scales with real
 codec cost and scan I/O.
 
@@ -27,137 +28,71 @@ VAD is aggregated to clip grain here (n_segments, speech_frames) — the
 per-segment rows remain vad_segments' job; a screen wants the verdict,
 not the cut list.
 
-Zero shuffles; nondeterministic-pinned (the CollapseProject lesson).
+Zero shuffles; one decode per row (functions/audio.decoded_udf).
 """
 
 from __future__ import annotations
 
-import pyarrow as pa
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .. import rules
-from .bandwidth import band_of
-from .click import click_of
-from .dropout import dropout_of
-from .dynrange import dr_of
-from .hum import hum_of
-from .pitch import pitch_of
-from .reverb import reverb_of
-from .snr import snr_of
+from ..functions.audio import decoded_udf, with_sr
+from .bandwidth import band_of, narrowband
+from .click import click_of, click_verdicts
+from .dropout import dropout_of, dropout_verdicts
+from .dynrange import compressed, dr_of
+from .hum import hum_of, hum_verdicts
+from .pitch import pitch_of, pitch_verdicts
+from .reverb import reverb_detected, reverb_of
+from .snr import snr_keep, snr_of
 from .vad import segment_samples
 
 _SCREEN_T = T.StructType(
     [
-        T.StructField("n_segments", T.LongType()),
-        T.StructField("speech_frames", T.LongType()),
-        T.StructField("snr_status", T.StringType()),
-        T.StructField("snr_ratio", T.LongType()),
-        T.StructField("pitch_status", T.StringType()),
-        T.StructField("f0_centi_hz", T.LongType()),
-        T.StructField("periodicity_permille", T.LongType()),
-        T.StructField("hum_status", T.StringType()),
-        T.StructField("dc_offset", T.LongType()),
-        T.StructField("hum_permille", T.LongType()),
-        T.StructField("hum_hz", T.LongType()),
-        T.StructField("bw_status", T.StringType()),
-        T.StructField("est_nyquist_hz", T.LongType()),
-        T.StructField("rev_status", T.StringType()),
-        T.StructField("rt60_ms", T.LongType()),
-        T.StructField("dr_status", T.StringType()),
-        T.StructField("dr_ratio_permille", T.LongType()),
-        T.StructField("drop_status", T.StringType()),
-        T.StructField("dropout_permille", T.LongType()),
-        T.StructField("stuck_permille", T.LongType()),
-        T.StructField("click_status", T.StringType()),
-        T.StructField("clicks_per_min", T.LongType()),
+        T.StructField(n, T.StringType() if n.endswith("_status") else T.LongType())
+        for n in (
+            "n_segments", "speech_frames",
+            "snr_status", "snr_ratio",
+            "pitch_status", "f0_centi_hz", "periodicity_permille",
+            "hum_status", "dc_offset", "hum_permille", "hum_hz",
+            "bw_status", "est_nyquist_hz",
+            "rev_status", "rt60_ms",
+            "dr_status", "dr_ratio_permille",
+            "drop_status", "dropout_permille", "stuck_permille",
+            "click_status", "clicks_per_min",
+        )
     ]
 )
 
 
-@F.arrow_udf(_SCREEN_T)
-def _screen_udf(raw: pa.Array, codec: pa.Array, sr: pa.Array) -> pa.Array:
-    from ..functions.audio import _binary_bounds
-    from .audiodup import _decode_s16
-
-    data, starts, ends = _binary_bounds(raw)
-    codecs = codec.to_pylist()
-    srs = sr.to_pylist()
-    out = []
-    for i in range(len(codecs)):
-        x = _decode_s16(data, int(starts[i]), int(ends[i]), codecs[i])
-        if x is None or not srs[i] or srs[i] <= 0:
-            out.append(None)
-            continue
-        s = int(srs[i])
-        segs = segment_samples(x, s)
-        snr_st, _, _, _, _, snr_ratio = snr_of(x, s)
-        p_st, _, f0, per = pitch_of(x, s)
-        h_st, _, dc, _, hum_p, hum_hz = hum_of(x, s)
-        b_st, _, _, est = band_of(x, s)
-        r_st, _, _, _, _, rt60 = reverb_of(x, s)
-        d_st, _, _, _, _, dr = dr_of(x, s)
-        g_st, _, _, _, _, _, _, _, dp_p, st_p = dropout_of(x, s)
-        c_st, _, _, _, _, _, cpm = click_of(x, s)
-        out.append(
-            {
-                "n_segments": len(segs),
-                "speech_frames": sum(e - b for b, e in segs),
-                "snr_status": snr_st,
-                "snr_ratio": snr_ratio,
-                "pitch_status": p_st,
-                "f0_centi_hz": f0,
-                "periodicity_permille": per,
-                "hum_status": h_st,
-                "dc_offset": dc,
-                "hum_permille": hum_p,
-                "hum_hz": hum_hz,
-                "bw_status": b_st,
-                "est_nyquist_hz": est,
-                "rev_status": r_st,
-                "rt60_ms": rt60,
-                "dr_status": d_st,
-                "dr_ratio_permille": dr,
-                "drop_status": g_st,
-                "dropout_permille": dp_p,
-                "stuck_permille": st_p,
-                "click_status": c_st,
-                "clicks_per_min": cpm,
-            }
-        )
-    return pa.array(
-        out,
-        type=pa.struct(
-            [
-                ("n_segments", pa.int64()),
-                ("speech_frames", pa.int64()),
-                ("snr_status", pa.string()),
-                ("snr_ratio", pa.int64()),
-                ("pitch_status", pa.string()),
-                ("f0_centi_hz", pa.int64()),
-                ("periodicity_permille", pa.int64()),
-                ("hum_status", pa.string()),
-                ("dc_offset", pa.int64()),
-                ("hum_permille", pa.int64()),
-                ("hum_hz", pa.int64()),
-                ("bw_status", pa.string()),
-                ("est_nyquist_hz", pa.int64()),
-                ("rev_status", pa.string()),
-                ("rt60_ms", pa.int64()),
-                ("dr_status", pa.string()),
-                ("dr_ratio_permille", pa.int64()),
-                ("drop_status", pa.string()),
-                ("dropout_permille", pa.int64()),
-                ("stuck_permille", pa.int64()),
-                ("click_status", pa.string()),
-                ("clicks_per_min", pa.int64()),
-            ]
-        ),
+def screen_of(x: np.ndarray, sr: int) -> tuple:
+    """All nine screens' kernels on one decoded buffer -> one row in
+    _SCREEN_T field order."""
+    segs = segment_samples(x, sr)
+    snr_st, _, _, _, _, snr_ratio = snr_of(x, sr)
+    p_st, _, f0, per = pitch_of(x, sr)
+    h_st, _, dc, _, hum_p, hum_hz = hum_of(x, sr)
+    b_st, _, _, est = band_of(x, sr)
+    r_st, _, _, _, _, rt60 = reverb_of(x, sr)
+    d_st, _, _, _, _, dr = dr_of(x, sr)
+    g_st, _, _, _, _, _, _, _, dp_p, st_p = dropout_of(x, sr)
+    c_st, _, _, _, _, _, cpm = click_of(x, sr)
+    return (
+        len(segs), sum(e - b for b, e in segs),
+        snr_st, snr_ratio,
+        p_st, f0, per,
+        h_st, dc, hum_p, hum_hz,
+        b_st, est,
+        r_st, rt60,
+        d_st, dr,
+        g_st, dp_p, st_p,
+        c_st, cpm,
     )
 
 
-_screen_udf = _screen_udf.asNondeterministic()
+_screen_udf = decoded_udf(_SCREEN_T, with_sr(screen_of))
 
 
 def screen_audio(
@@ -168,96 +103,49 @@ def screen_audio(
     sr_col: str = "sr_hz",
     passthrough: tuple[str, ...] = (),
 ) -> DataFrame:
-    """(clip_id, n_segments, speech_frames, snr_status, snr_ratio,
-    pitch_status, f0_centi_hz, periodicity_permille, hum_status,
-    dc_offset, hum_permille, hum_hz, bw_status, est_nyquist_hz,
-    rev_status, rt60_ms, dr_status, dr_ratio_permille, drop_status,
-    dropout_permille, stuck_permille, click_status, clicks_per_min,
-    snr_keep,
-    voiced, speechlike, hum_detected, dc_detected, hum_keep, narrowband,
+    """(clip_id, *passthrough, the _SCREEN_T fields, snr_keep, voiced,
+    speechlike, hum_detected, dc_detected, hum_keep, narrowband,
     reverb_detected, rev_keep, compressed, dr_keep, dropout_detected,
     stuck_detected, drop_keep, click_detected, click_keep) — all nine
-    screens'
-    verdicts from one decode; verdict booleans are the standalone
-    operators' JVM-side rules verbatim (snr.snr_screen,
-    pitch.pitch_screen, hum.hum_screen, bandwidth.bandwidth_screen,
-    reverb.reverb_screen, dynrange.dynrange_screen,
-    dropout.dropout_screen, click.click_screen). `passthrough` names
-    extra clip columns to carry through unchanged (zero cost — they ride
-    the same projection), so compositions like rate.speech_rate read
-    transcript next to the verdicts without a join or second decode."""
+    screens' verdicts from one decode; each verdict is the standalone
+    operator's own rule function (snr.snr_keep, pitch.pitch_verdicts,
+    hum.hum_verdicts, bandwidth.narrowband, reverb.reverb_detected,
+    dynrange.compressed, dropout.dropout_verdicts,
+    click.click_verdicts). `passthrough` names extra clip columns to
+    carry through unchanged (zero cost — they ride the same projection),
+    so compositions like rate.speech_rate read transcript next to the
+    verdicts without a join or second decode."""
     e = clips.select(
         F.col(id_col).alias("clip_id"),
         F.col(sr_col).alias("sr_hz"),
         *[F.col(c) for c in passthrough],
         _screen_udf(F.col(bytes_col), F.col(codec_col), F.col(sr_col)).alias("a"),
     ).where(F.col("a").isNotNull())
-    snr_keep = (F.col("a.snr_status") == "clean") | (
-        (F.col("a.snr_status") == "ok") & (F.col("a.snr_ratio") >= rules.SNR_MIN_RATIO)
+
+    def a(n: str):
+        return F.col(f"a.{n}")
+
+    voiced, speechlike = pitch_verdicts(
+        a("pitch_status"), a("periodicity_permille"), a("f0_centi_hz")
     )
-    voiced = (F.col("a.pitch_status") == "ok") & (
-        F.col("a.periodicity_permille") >= rules.PITCH_VOICED_MIN_PERMILLE
+    hum, dc, hum_keep = hum_verdicts(a("hum_status"), a("hum_permille"), a("dc_offset"))
+    rev = reverb_detected(a("rev_status"), a("rt60_ms"))
+    comp = compressed(a("dr_status"), a("dr_ratio_permille"))
+    gap, stuck, drop_keep = dropout_verdicts(
+        a("drop_status"), a("dropout_permille"), a("stuck_permille")
     )
-    in_band = F.col("a.f0_centi_hz").between(
-        100 * rules.PITCH_F0_MIN_HZ, 100 * rules.PITCH_F0_MAX_HZ
-    )
-    hum = F.coalesce(
-        F.col("a.hum_permille") >= rules.HUM_MAX_PERMILLE, F.lit(False)
-    )
-    dc = F.abs(F.col("a.dc_offset")) >= rules.DC_OFFSET_MAX
-    hum_keep = (F.col("a.hum_status") == "ok") & ~hum & ~dc
-    narrow = F.coalesce(
-        2 * F.col("a.est_nyquist_hz") < F.col("sr_hz"), F.lit(False)
-    )
-    rev = (F.col("a.rev_status") == "ok") & (
-        F.col("a.rt60_ms") >= rules.REVERB_MAX_RT60_MS
-    )
-    comp = (F.col("a.dr_status") == "ok") & (
-        F.col("a.dr_ratio_permille") >= rules.DR_COMPRESSED_MIN_PERMILLE
-    )
-    gap = F.coalesce(
-        F.col("a.dropout_permille") >= rules.DROPOUT_MAX_PERMILLE, F.lit(False)
-    )
-    stuck = F.coalesce(
-        F.col("a.stuck_permille") >= rules.STUCK_MAX_PERMILLE, F.lit(False)
-    )
-    drop_keep = (F.col("a.drop_status") == "ok") & ~gap & ~stuck
-    clk = F.coalesce(
-        F.col("a.clicks_per_min") >= rules.CLICK_MAX_PER_MIN, F.lit(False)
-    )
-    click_keep = (F.col("a.click_status") == "ok") & ~clk
+    clk, click_keep = click_verdicts(a("click_status"), a("clicks_per_min"))
     return e.select(
         "clip_id",
         *passthrough,
-        F.col("a.n_segments").alias("n_segments"),
-        F.col("a.speech_frames").alias("speech_frames"),
-        F.col("a.snr_status").alias("snr_status"),
-        F.col("a.snr_ratio").alias("snr_ratio"),
-        F.col("a.pitch_status").alias("pitch_status"),
-        F.col("a.f0_centi_hz").alias("f0_centi_hz"),
-        F.col("a.periodicity_permille").alias("periodicity_permille"),
-        F.col("a.hum_status").alias("hum_status"),
-        F.col("a.dc_offset").alias("dc_offset"),
-        F.col("a.hum_permille").alias("hum_permille"),
-        F.col("a.hum_hz").alias("hum_hz"),
-        F.col("a.bw_status").alias("bw_status"),
-        F.col("a.est_nyquist_hz").alias("est_nyquist_hz"),
-        F.col("a.rev_status").alias("rev_status"),
-        F.col("a.rt60_ms").alias("rt60_ms"),
-        F.col("a.dr_status").alias("dr_status"),
-        F.col("a.dr_ratio_permille").alias("dr_ratio_permille"),
-        F.col("a.drop_status").alias("drop_status"),
-        F.col("a.dropout_permille").alias("dropout_permille"),
-        F.col("a.stuck_permille").alias("stuck_permille"),
-        F.col("a.click_status").alias("click_status"),
-        F.col("a.clicks_per_min").alias("clicks_per_min"),
-        snr_keep.alias("snr_keep"),
+        "a.*",
+        snr_keep(a("snr_status"), a("snr_ratio")).alias("snr_keep"),
         voiced.alias("voiced"),
-        (voiced & in_band).alias("speechlike"),
+        speechlike.alias("speechlike"),
         hum.alias("hum_detected"),
         dc.alias("dc_detected"),
         hum_keep.alias("hum_keep"),
-        narrow.alias("narrowband"),
+        narrowband(a("est_nyquist_hz"), F.col("sr_hz")).alias("narrowband"),
         rev.alias("reverb_detected"),
         (~rev).alias("rev_keep"),
         comp.alias("compressed"),

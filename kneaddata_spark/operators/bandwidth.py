@@ -45,22 +45,21 @@ dropping real wideband audio). Verdict JVM-side: narrowband =
 ('short'/'silent' report keep = false — unmeasurable is not a pass; the
 snr_screen convention).
 
-Boundary contract: ONE ArrowEvalPython stage (nondeterministic pin so
-CollapseProject cannot duplicate the decode), scalar witnesses out,
-zero shuffles, bytes never cross Python->JVM.
+Boundary contract: ONE ArrowEvalPython stage (functions/audio.decoded_udf),
+scalar witnesses out, zero shuffles, bytes never cross Python->JVM.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pyarrow as pa
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import rules
+from ..functions.audio import decoded_udf, with_sr
 
-__all__ = ["band_of", "bandwidth_screen"]
+__all__ = ["band_of", "bandwidth_screen", "narrowband"]
 
 _CHUNK = 1 << 18
 
@@ -113,48 +112,18 @@ _BW_T = T.StructType(
 )
 
 
-@F.arrow_udf(_BW_T)
-def _bw_udf(raw: pa.Array, codec: pa.Array, sr: pa.Array) -> pa.Array:
-    from ..functions.audio import _binary_bounds
-    from .audiodup import _decode_s16
-
-    data, starts, ends = _binary_bounds(raw)
-    codecs = codec.to_pylist()
-    srs = sr.to_pylist()
-    out = []
-    for i in range(len(codecs)):
-        x = _decode_s16(data, int(starts[i]), int(ends[i]), codecs[i])
-        if x is None or not srs[i] or srs[i] <= 0:
-            out.append(None)
-            continue
-        st, n, octs, est = band_of(x, int(srs[i]))
-        out.append(
-            {
-                "status": st,
-                "n_samples": n,
-                "oct1_permille": octs[0],
-                "oct2_permille": octs[1],
-                "oct3_permille": octs[2],
-                "est_nyquist_hz": est,
-            }
-        )
-    return pa.array(
-        out,
-        type=pa.struct(
-            [
-                ("status", pa.string()),
-                ("n_samples", pa.int64()),
-                ("oct1_permille", pa.int64()),
-                ("oct2_permille", pa.int64()),
-                ("oct3_permille", pa.int64()),
-                ("est_nyquist_hz", pa.int64()),
-            ]
-        ),
-    )
+def _band_row(x: np.ndarray, sr: int):
+    st, n, octs, est = band_of(x, sr)
+    return (st, n, *octs, est)
 
 
-# one evaluation per row (the VAD/resample CollapseProject pin)
-_bw_udf = _bw_udf.asNondeterministic()
+_bw_udf = decoded_udf(_BW_T, with_sr(_band_row))
+
+
+def narrowband(est_nyquist_hz: Column, sr_hz: Column) -> Column:
+    """2 * est_nyquist_hz < sr_hz (integer comparison; an unmeasured
+    clip is not narrowband)."""
+    return F.coalesce(2 * est_nyquist_hz < sr_hz, F.lit(False))
 
 
 def bandwidth_screen(
@@ -166,26 +135,15 @@ def bandwidth_screen(
 ) -> DataFrame:
     """(clip_id, sr_hz, status, n_samples, oct1_permille, oct2_permille,
     oct3_permille, est_nyquist_hz, narrowband, keep) — one row per
-    decodable clip; narrowband/keep are JVM-side integer comparisons
-    (2*est_nyquist_hz < sr_hz). Zero shuffles."""
+    decodable clip; keep is status 'ok' and not narrowband. Zero
+    shuffles."""
     e = clips.select(
         F.col(id_col).alias("clip_id"),
         F.col(sr_col).alias("sr_hz"),
         _bw_udf(F.col(bytes_col), F.col(codec_col), F.col(sr_col)).alias("b"),
     ).where(F.col("b").isNotNull())
-    narrow = F.coalesce(
-        2 * F.col("b.est_nyquist_hz") < F.col("sr_hz"), F.lit(False)
-    )
+    narrow = narrowband(F.col("b.est_nyquist_hz"), F.col("sr_hz"))
     keep = (F.col("b.status") == "ok") & ~narrow
     return e.select(
-        "clip_id",
-        "sr_hz",
-        F.col("b.status").alias("status"),
-        F.col("b.n_samples").alias("n_samples"),
-        F.col("b.oct1_permille").alias("oct1_permille"),
-        F.col("b.oct2_permille").alias("oct2_permille"),
-        F.col("b.oct3_permille").alias("oct3_permille"),
-        F.col("b.est_nyquist_hz").alias("est_nyquist_hz"),
-        narrow.alias("narrowband"),
-        keep.alias("keep"),
+        "clip_id", "sr_hz", "b.*", narrow.alias("narrowband"), keep.alias("keep")
     )

@@ -23,22 +23,21 @@ Kernel (integer-exact; constants in rules.py):
 
 Verdict is a JVM-side integer comparison against rules.CLICK_MAX_PER_MIN.
 
-Boundary contract: ONE ArrowEvalPython stage (nondeterministic pin so
-CollapseProject cannot duplicate the decode), scalar witnesses out,
-zero shuffles, bytes never cross Python->JVM.
+Boundary contract: ONE ArrowEvalPython stage (functions/audio.decoded_udf),
+scalar witnesses out, zero shuffles, bytes never cross Python->JVM.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pyarrow as pa
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import rules
+from ..functions.audio import decoded_udf, with_sr
 
-__all__ = ["click_of", "click_screen"]
+__all__ = ["click_of", "click_screen", "click_verdicts"]
 
 
 def click_of(x: np.ndarray, sr: int):
@@ -78,40 +77,26 @@ def click_of(x: np.ndarray, sr: int):
     )
 
 
-_FIELDS = [
-    ("status", pa.string(), T.StringType()),
-    ("n_samples", pa.int64(), T.LongType()),
-    ("d2_mad", pa.int64(), T.LongType()),
-    ("n_click_samples", pa.int64(), T.LongType()),
-    ("n_click_events", pa.int64(), T.LongType()),
-    ("max_abs_d2", pa.int64(), T.LongType()),
-    ("clicks_per_min", pa.int64(), T.LongType()),
-]
-_CLICK_T = T.StructType([T.StructField(n, t) for n, _, t in _FIELDS])
-_CLICK_PA = pa.struct([(n, t) for n, t, _ in _FIELDS])
-_NAMES = [n for n, _, _ in _FIELDS]
+_CLICK_T = T.StructType(
+    [
+        T.StructField("status", T.StringType()),
+        T.StructField("n_samples", T.LongType()),
+        T.StructField("d2_mad", T.LongType()),
+        T.StructField("n_click_samples", T.LongType()),
+        T.StructField("n_click_events", T.LongType()),
+        T.StructField("max_abs_d2", T.LongType()),
+        T.StructField("clicks_per_min", T.LongType()),
+    ]
+)
+
+_click_udf = decoded_udf(_CLICK_T, with_sr(click_of))
 
 
-@F.arrow_udf(_CLICK_T)
-def _click_udf(raw: pa.Array, codec: pa.Array, sr: pa.Array) -> pa.Array:
-    from ..functions.audio import _binary_bounds
-    from .audiodup import _decode_s16
-
-    data, starts, ends = _binary_bounds(raw)
-    codecs = codec.to_pylist()
-    srs = sr.to_pylist()
-    out = []
-    for i in range(len(codecs)):
-        x = _decode_s16(data, int(starts[i]), int(ends[i]), codecs[i])
-        if x is None or len(x) == 0 or not srs[i] or srs[i] <= 0:
-            out.append(None)
-            continue
-        out.append(dict(zip(_NAMES, click_of(x, int(srs[i])))))
-    return pa.array(out, type=_CLICK_PA)
-
-
-# one evaluation per row (the VAD/resample CollapseProject pin)
-_click_udf = _click_udf.asNondeterministic()
+def click_verdicts(status: Column, clicks_per_min: Column):
+    """(click_detected, keep): clicks_per_min >= rules.CLICK_MAX_PER_MIN;
+    keep needs status 'ok' and no detection."""
+    det = F.coalesce(clicks_per_min >= rules.CLICK_MAX_PER_MIN, F.lit(False))
+    return det, (status == "ok") & ~det
 
 
 def click_screen(
@@ -123,19 +108,13 @@ def click_screen(
 ) -> DataFrame:
     """(clip_id, status, n_samples, d2_mad, n_click_samples,
     n_click_events, max_abs_d2, clicks_per_min, click_detected, keep) —
-    one row per decodable clip; verdicts are JVM-side integer
-    comparisons. Zero shuffles."""
+    one row per decodable clip; verdicts are click_verdicts. Zero
+    shuffles."""
     e = clips.select(
         F.col(id_col).alias("clip_id"),
         _click_udf(F.col(bytes_col), F.col(codec_col), F.col(sr_col)).alias("c"),
     ).where(F.col("c").isNotNull())
-    det = F.coalesce(
-        F.col("c.clicks_per_min") >= rules.CLICK_MAX_PER_MIN, F.lit(False)
-    )
-    keep = (F.col("c.status") == "ok") & ~det
+    det, keep = click_verdicts(F.col("c.status"), F.col("c.clicks_per_min"))
     return e.select(
-        "clip_id",
-        *[F.col(f"c.{n}").alias(n) for n in _NAMES],
-        det.alias("click_detected"),
-        keep.alias("keep"),
+        "clip_id", "c.*", det.alias("click_detected"), keep.alias("keep")
     )

@@ -25,22 +25,21 @@ Kernel (integer-exact; constants in rules.py):
 Verdicts are JVM-side integer comparisons against
 rules.DROPOUT_MAX_PERMILLE / rules.STUCK_MAX_PERMILLE.
 
-Boundary contract: ONE ArrowEvalPython stage (nondeterministic pin so
-CollapseProject cannot duplicate the decode), scalar witnesses out,
-zero shuffles, bytes never cross Python->JVM.
+Boundary contract: ONE ArrowEvalPython stage (functions/audio.decoded_udf),
+scalar witnesses out, zero shuffles, bytes never cross Python->JVM.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pyarrow as pa
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import rules
+from ..functions.audio import decoded_udf, with_sr
 
-__all__ = ["dropout_of", "dropout_screen"]
+__all__ = ["dropout_of", "dropout_screen", "dropout_verdicts"]
 
 
 def dropout_of(x: np.ndarray, sr: int):
@@ -85,43 +84,31 @@ def dropout_of(x: np.ndarray, sr: int):
     )
 
 
-_FIELDS = [
-    ("status", pa.string(), T.StringType()),
-    ("n_samples", pa.int64(), T.LongType()),
-    ("active_n", pa.int64(), T.LongType()),
-    ("n_dropouts", pa.int64(), T.LongType()),
-    ("dropout_samples", pa.int64(), T.LongType()),
-    ("max_dropout_run", pa.int64(), T.LongType()),
-    ("n_stuck", pa.int64(), T.LongType()),
-    ("stuck_samples", pa.int64(), T.LongType()),
-    ("dropout_permille", pa.int64(), T.LongType()),
-    ("stuck_permille", pa.int64(), T.LongType()),
-]
-_DROP_T = T.StructType([T.StructField(n, t) for n, _, t in _FIELDS])
-_DROP_PA = pa.struct([(n, t) for n, t, _ in _FIELDS])
-_NAMES = [n for n, _, _ in _FIELDS]
+_DROP_T = T.StructType(
+    [
+        T.StructField("status", T.StringType()),
+        T.StructField("n_samples", T.LongType()),
+        T.StructField("active_n", T.LongType()),
+        T.StructField("n_dropouts", T.LongType()),
+        T.StructField("dropout_samples", T.LongType()),
+        T.StructField("max_dropout_run", T.LongType()),
+        T.StructField("n_stuck", T.LongType()),
+        T.StructField("stuck_samples", T.LongType()),
+        T.StructField("dropout_permille", T.LongType()),
+        T.StructField("stuck_permille", T.LongType()),
+    ]
+)
+
+_dropout_udf = decoded_udf(_DROP_T, with_sr(dropout_of))
 
 
-@F.arrow_udf(_DROP_T)
-def _dropout_udf(raw: pa.Array, codec: pa.Array, sr: pa.Array) -> pa.Array:
-    from ..functions.audio import _binary_bounds
-    from .audiodup import _decode_s16
-
-    data, starts, ends = _binary_bounds(raw)
-    codecs = codec.to_pylist()
-    srs = sr.to_pylist()
-    out = []
-    for i in range(len(codecs)):
-        x = _decode_s16(data, int(starts[i]), int(ends[i]), codecs[i])
-        if x is None or len(x) == 0 or not srs[i] or srs[i] <= 0:
-            out.append(None)
-            continue
-        out.append(dict(zip(_NAMES, dropout_of(x, int(srs[i])))))
-    return pa.array(out, type=_DROP_PA)
-
-
-# one evaluation per row (the VAD/resample CollapseProject pin)
-_dropout_udf = _dropout_udf.asNondeterministic()
+def dropout_verdicts(status: Column, dropout_permille: Column, stuck_permille: Column):
+    """(dropout_detected, stuck_detected, keep): integer comparisons
+    against rules.DROPOUT_MAX_PERMILLE / rules.STUCK_MAX_PERMILLE; keep
+    needs status 'ok' and neither defect."""
+    drop = F.coalesce(dropout_permille >= rules.DROPOUT_MAX_PERMILLE, F.lit(False))
+    stuck = F.coalesce(stuck_permille >= rules.STUCK_MAX_PERMILLE, F.lit(False))
+    return drop, stuck, (status == "ok") & ~drop & ~stuck
 
 
 def dropout_screen(
@@ -134,22 +121,17 @@ def dropout_screen(
     """(clip_id, status, n_samples, active_n, n_dropouts, dropout_samples,
     max_dropout_run, n_stuck, stuck_samples, dropout_permille,
     stuck_permille, dropout_detected, stuck_detected, keep) — one row per
-    decodable clip; verdicts are JVM-side integer comparisons. Zero
-    shuffles."""
+    decodable clip; verdicts are dropout_verdicts. Zero shuffles."""
     e = clips.select(
         F.col(id_col).alias("clip_id"),
         _dropout_udf(F.col(bytes_col), F.col(codec_col), F.col(sr_col)).alias("d"),
     ).where(F.col("d").isNotNull())
-    drop = F.coalesce(
-        F.col("d.dropout_permille") >= rules.DROPOUT_MAX_PERMILLE, F.lit(False)
+    drop, stuck, keep = dropout_verdicts(
+        F.col("d.status"), F.col("d.dropout_permille"), F.col("d.stuck_permille")
     )
-    stuck = F.coalesce(
-        F.col("d.stuck_permille") >= rules.STUCK_MAX_PERMILLE, F.lit(False)
-    )
-    keep = (F.col("d.status") == "ok") & ~drop & ~stuck
     return e.select(
         "clip_id",
-        *[F.col(f"d.{n}").alias(n) for n in _NAMES],
+        "d.*",
         drop.alias("dropout_detected"),
         stuck.alias("stuck_detected"),
         keep.alias("keep"),

@@ -33,22 +33,21 @@ compressed ('short'/'silent' rows keep — an unresolvable range is
 masked evidence, not a certified defect; the reverb_screen convention,
 documented in rules.py).
 
-Boundary contract: ONE ArrowEvalPython stage (nondeterministic pin so
-CollapseProject cannot duplicate the decode), scalar witnesses out,
-zero shuffles, bytes never cross Python->JVM.
+Boundary contract: ONE ArrowEvalPython stage (functions/audio.decoded_udf),
+scalar witnesses out, zero shuffles, bytes never cross Python->JVM.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pyarrow as pa
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import rules
+from ..functions.audio import decoded_udf, with_sr
 
-__all__ = ["dr_of", "dynrange_screen"]
+__all__ = ["compressed", "dr_of", "dynrange_screen"]
 
 
 def dr_of(x: np.ndarray, sr: int):
@@ -85,49 +84,13 @@ _DR_T = T.StructType(
     ]
 )
 
-
-@F.arrow_udf(_DR_T)
-def _dr_udf(raw: pa.Array, codec: pa.Array, sr: pa.Array) -> pa.Array:
-    from ..functions.audio import _binary_bounds
-    from .audiodup import _decode_s16
-
-    data, starts, ends = _binary_bounds(raw)
-    codecs = codec.to_pylist()
-    srs = sr.to_pylist()
-    out = []
-    for i in range(len(codecs)):
-        x = _decode_s16(data, int(starts[i]), int(ends[i]), codecs[i])
-        if x is None or len(x) == 0 or not srs[i] or srs[i] <= 0:
-            out.append(None)
-            continue
-        st, n_f, n_a, p10, p95, ratio = dr_of(x, int(srs[i]))
-        out.append(
-            {
-                "status": st,
-                "n_frames": n_f,
-                "n_active": n_a,
-                "p10_energy": p10,
-                "p95_energy": p95,
-                "dr_ratio_permille": ratio,
-            }
-        )
-    return pa.array(
-        out,
-        type=pa.struct(
-            [
-                ("status", pa.string()),
-                ("n_frames", pa.int64()),
-                ("n_active", pa.int64()),
-                ("p10_energy", pa.int64()),
-                ("p95_energy", pa.int64()),
-                ("dr_ratio_permille", pa.int64()),
-            ]
-        ),
-    )
+_dr_udf = decoded_udf(_DR_T, with_sr(dr_of))
 
 
-# one evaluation per row (the VAD/resample CollapseProject pin)
-_dr_udf = _dr_udf.asNondeterministic()
+def compressed(status: Column, dr_ratio_permille: Column) -> Column:
+    """status 'ok' and dr_ratio_permille >=
+    rules.DR_COMPRESSED_MIN_PERMILLE; keep is its negation."""
+    return (status == "ok") & (dr_ratio_permille >= rules.DR_COMPRESSED_MIN_PERMILLE)
 
 
 def dynrange_screen(
@@ -139,23 +102,12 @@ def dynrange_screen(
 ) -> DataFrame:
     """(clip_id, status, n_frames, n_active, p10_energy, p95_energy,
     dr_ratio_permille, compressed, keep) — one row per decodable clip;
-    verdicts are JVM-side integer comparisons against
-    rules.DR_COMPRESSED_MIN_PERMILLE. Zero shuffles."""
+    the verdict is compressed. Zero shuffles."""
     e = clips.select(
         F.col(id_col).alias("clip_id"),
         _dr_udf(F.col(bytes_col), F.col(codec_col), F.col(sr_col)).alias("d"),
     ).where(F.col("d").isNotNull())
-    comp = (F.col("d.status") == "ok") & (
-        F.col("d.dr_ratio_permille") >= rules.DR_COMPRESSED_MIN_PERMILLE
-    )
+    comp = compressed(F.col("d.status"), F.col("d.dr_ratio_permille"))
     return e.select(
-        "clip_id",
-        F.col("d.status").alias("status"),
-        F.col("d.n_frames").alias("n_frames"),
-        F.col("d.n_active").alias("n_active"),
-        F.col("d.p10_energy").alias("p10_energy"),
-        F.col("d.p95_energy").alias("p95_energy"),
-        F.col("d.dr_ratio_permille").alias("dr_ratio_permille"),
-        comp.alias("compressed"),
-        (~comp).alias("keep"),
+        "clip_id", "d.*", comp.alias("compressed"), (~comp).alias("keep")
     )

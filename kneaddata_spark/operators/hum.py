@@ -34,24 +34,23 @@ rules.DC_OFFSET_MAX, keep = status == 'ok' AND neither defect ('short'
 and 'silent' rows report keep = false — unmeasurable is not a pass;
 the snr_screen convention).
 
-Boundary contract: ONE ArrowEvalPython stage (nondeterministic pin so
-CollapseProject cannot duplicate the decode), scalar witnesses out,
-zero shuffles, bytes never cross Python->JVM.
+Boundary contract: ONE ArrowEvalPython stage (functions/audio.decoded_udf),
+scalar witnesses out, zero shuffles, bytes never cross Python->JVM.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pyarrow as pa
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import rules
+from ..functions.audio import decoded_udf, with_sr
 
 Q15 = 32767
 
-__all__ = ["Q15", "hum_basis", "hum_of", "hum_screen"]
+__all__ = ["Q15", "hum_basis", "hum_of", "hum_screen", "hum_verdicts"]
 
 # per-worker basis cache: (sr, f) -> (c, s) int64 arrays, grown to the
 # longest clip seen (elementwise values are length-independent, so a
@@ -118,50 +117,21 @@ _HUM_T = T.StructType(
 )
 
 
-@F.arrow_udf(_HUM_T)
-def _hum_udf(raw: pa.Array, codec: pa.Array, sr: pa.Array) -> pa.Array:
-    from ..functions.audio import _binary_bounds
-    from .audiodup import _decode_s16
-
-    data, starts, ends = _binary_bounds(raw)
-    codecs = codec.to_pylist()
-    srs = sr.to_pylist()
-    out = []
-    for i in range(len(codecs)):
-        x = _decode_s16(data, int(starts[i]), int(ends[i]), codecs[i])
-        if x is None or len(x) == 0 or not srs[i] or srs[i] <= 0:
-            out.append(None)
-            continue
-        st, n, dc, per, hp, hz = hum_of(x, int(srs[i]))
-        out.append(
-            {
-                "status": st,
-                "n_samples": n,
-                "dc_offset": dc,
-                "hum50_permille": per[0],
-                "hum60_permille": per[1],
-                "hum_permille": hp,
-                "hum_hz": hz,
-            }
-        )
-    return pa.array(
-        out,
-        type=pa.struct(
-            [
-                ("status", pa.string()),
-                ("n_samples", pa.int64()),
-                ("dc_offset", pa.int64()),
-                ("hum50_permille", pa.int64()),
-                ("hum60_permille", pa.int64()),
-                ("hum_permille", pa.int64()),
-                ("hum_hz", pa.int64()),
-            ]
-        ),
-    )
+def _hum_row(x: np.ndarray, sr: int):
+    st, n, dc, per, hp, hz = hum_of(x, sr)
+    return (st, n, dc, *per, hp, hz)
 
 
-# one evaluation per row (the VAD/resample CollapseProject pin)
-_hum_udf = _hum_udf.asNondeterministic()
+_hum_udf = decoded_udf(_HUM_T, with_sr(_hum_row))
+
+
+def hum_verdicts(status: Column, hum_permille: Column, dc_offset: Column):
+    """(hum_detected, dc_detected, keep): integer comparisons against
+    rules.HUM_MAX_PERMILLE / rules.DC_OFFSET_MAX; keep needs status 'ok'
+    and neither defect."""
+    hum = F.coalesce(hum_permille >= rules.HUM_MAX_PERMILLE, F.lit(False))
+    dc = F.abs(dc_offset) >= rules.DC_OFFSET_MAX
+    return hum, dc, (status == "ok") & ~hum & ~dc
 
 
 def hum_screen(
@@ -173,27 +143,18 @@ def hum_screen(
 ) -> DataFrame:
     """(clip_id, status, n_samples, dc_offset, hum50_permille,
     hum60_permille, hum_permille, hum_hz, hum_detected, dc_detected,
-    keep) — one row per decodable clip; verdicts are JVM-side integer
-    comparisons against rules.HUM_MAX_PERMILLE / rules.DC_OFFSET_MAX.
+    keep) — one row per decodable clip; verdicts are hum_verdicts.
     Zero shuffles."""
     e = clips.select(
         F.col(id_col).alias("clip_id"),
         _hum_udf(F.col(bytes_col), F.col(codec_col), F.col(sr_col)).alias("h"),
     ).where(F.col("h").isNotNull())
-    hum = F.coalesce(
-        F.col("h.hum_permille") >= rules.HUM_MAX_PERMILLE, F.lit(False)
+    hum, dc, keep = hum_verdicts(
+        F.col("h.status"), F.col("h.hum_permille"), F.col("h.dc_offset")
     )
-    dc = F.abs(F.col("h.dc_offset")) >= rules.DC_OFFSET_MAX
-    keep = (F.col("h.status") == "ok") & ~hum & ~dc
     return e.select(
         "clip_id",
-        F.col("h.status").alias("status"),
-        F.col("h.n_samples").alias("n_samples"),
-        F.col("h.dc_offset").alias("dc_offset"),
-        F.col("h.hum50_permille").alias("hum50_permille"),
-        F.col("h.hum60_permille").alias("hum60_permille"),
-        F.col("h.hum_permille").alias("hum_permille"),
-        F.col("h.hum_hz").alias("hum_hz"),
+        "h.*",
         hum.alias("hum_detected"),
         dc.alias("dc_detected"),
         keep.alias("keep"),

@@ -40,20 +40,20 @@ matrix x window vector — no per-lag python loop), cost bounded by
 W * n_lags <= 1024 * (sr div 50) regardless of clip duration.
 
 Boundary contract: bytes crosses JVM->Python once inside ONE
-ArrowEvalPython stage (nondeterministic-pinned — the VAD/resample
-lesson), only scalars return. Zero shuffles — fuses over the scan's
+ArrowEvalPython stage (functions/audio.decoded_udf), only scalars
+return. Zero shuffles — fuses over the scan's
 partitioning.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pyarrow as pa
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import rules
+from ..functions.audio import decoded_udf, with_sr
 
 
 def pitch_of(x: np.ndarray, sr: int):
@@ -110,45 +110,18 @@ _PITCH_T = T.StructType(
     ]
 )
 
+_pitch_udf = decoded_udf(_PITCH_T, with_sr(pitch_of))
 
-@F.arrow_udf(_PITCH_T)
-def _pitch_udf(raw: pa.Array, codec: pa.Array, sr: pa.Array) -> pa.Array:
-    from ..functions.audio import _binary_bounds
-    from .audiodup import _decode_s16
 
-    data, starts, ends = _binary_bounds(raw)
-    codecs = codec.to_pylist()
-    srs = sr.to_pylist()
-    out = []
-    for i in range(len(codecs)):
-        x = _decode_s16(data, int(starts[i]), int(ends[i]), codecs[i])
-        if x is None or not srs[i] or srs[i] <= 0:
-            out.append(None)
-            continue
-        status, lag, f0, per = pitch_of(x, int(srs[i]))
-        out.append(
-            {
-                "status": status,
-                "best_lag": lag,
-                "f0_centi_hz": f0,
-                "periodicity_permille": per,
-            }
-        )
-    return pa.array(
-        out,
-        type=pa.struct(
-            [
-                ("status", pa.string()),
-                ("best_lag", pa.int64()),
-                ("f0_centi_hz", pa.int64()),
-                ("periodicity_permille", pa.int64()),
-            ]
-        ),
+def pitch_verdicts(status: Column, periodicity: Column, f0_centi_hz: Column):
+    """(voiced, speechlike): integer comparisons against the rules
+    constants (shared thresholds stay integer — the cast-truncation
+    discipline); speechlike is voiced with f0 in the speech band."""
+    voiced = (status == "ok") & (periodicity >= rules.PITCH_VOICED_MIN_PERMILLE)
+    in_band = f0_centi_hz.between(
+        100 * rules.PITCH_F0_MIN_HZ, 100 * rules.PITCH_F0_MAX_HZ
     )
-
-
-# one evaluation per row (the VAD/resample CollapseProject pin)
-_pitch_udf = _pitch_udf.asNondeterministic()
+    return voiced, voiced & in_band
 
 
 def pitch_screen(
@@ -159,26 +132,15 @@ def pitch_screen(
     sr_col: str = "sr_hz",
 ) -> DataFrame:
     """(clip_id, status, best_lag, f0_centi_hz, periodicity_permille,
-    voiced, speechlike) — one row per decodable clip; verdict columns are
-    JVM-side integer comparisons against the rules constants (shared
-    thresholds stay integer — the cast-truncation discipline). Zero
-    shuffles."""
+    voiced, speechlike) — one row per decodable clip; verdicts are
+    pitch_verdicts. Zero shuffles."""
     e = clips.select(
         F.col(id_col).alias("clip_id"),
         _pitch_udf(F.col(bytes_col), F.col(codec_col), F.col(sr_col)).alias("p"),
     ).where(F.col("p").isNotNull())
-    voiced = (F.col("p.status") == "ok") & (
-        F.col("p.periodicity_permille") >= rules.PITCH_VOICED_MIN_PERMILLE
-    )
-    in_band = F.col("p.f0_centi_hz").between(
-        100 * rules.PITCH_F0_MIN_HZ, 100 * rules.PITCH_F0_MAX_HZ
+    voiced, speechlike = pitch_verdicts(
+        F.col("p.status"), F.col("p.periodicity_permille"), F.col("p.f0_centi_hz")
     )
     return e.select(
-        "clip_id",
-        F.col("p.status").alias("status"),
-        F.col("p.best_lag").alias("best_lag"),
-        F.col("p.f0_centi_hz").alias("f0_centi_hz"),
-        F.col("p.periodicity_permille").alias("periodicity_permille"),
-        voiced.alias("voiced"),
-        (voiced & in_band).alias("speechlike"),
+        "clip_id", "p.*", voiced.alias("voiced"), speechlike.alias("speechlike")
     )

@@ -34,22 +34,21 @@ unmeasurable-is-not-a-pass convention, deliberate and documented in
 rules.py: an unresolved decay is masked by ongoing content or noise
 floor — the common case for every dry clip — not a certified defect).
 
-Boundary contract: ONE ArrowEvalPython stage (nondeterministic pin so
-CollapseProject cannot duplicate the decode), scalar witnesses out,
-zero shuffles, bytes never cross Python->JVM.
+Boundary contract: ONE ArrowEvalPython stage (functions/audio.decoded_udf),
+scalar witnesses out, zero shuffles, bytes never cross Python->JVM.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pyarrow as pa
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import rules
+from ..functions.audio import decoded_udf, with_sr
 
-__all__ = ["reverb_of", "reverb_screen"]
+__all__ = ["reverb_detected", "reverb_of", "reverb_screen"]
 
 
 def reverb_of(x: np.ndarray, sr: int):
@@ -96,49 +95,13 @@ _REVERB_T = T.StructType(
     ]
 )
 
-
-@F.arrow_udf(_REVERB_T)
-def _reverb_udf(raw: pa.Array, codec: pa.Array, sr: pa.Array) -> pa.Array:
-    from ..functions.audio import _binary_bounds
-    from .audiodup import _decode_s16
-
-    data, starts, ends = _binary_bounds(raw)
-    codecs = codec.to_pylist()
-    srs = sr.to_pylist()
-    out = []
-    for i in range(len(codecs)):
-        x = _decode_s16(data, int(starts[i]), int(ends[i]), codecs[i])
-        if x is None or len(x) == 0 or not srs[i] or srs[i] <= 0:
-            out.append(None)
-            continue
-        st, n_f, last, tf, t20, rt = reverb_of(x, int(srs[i]))
-        out.append(
-            {
-                "status": st,
-                "n_frames": n_f,
-                "last_active_frame": last,
-                "tail_frames": tf,
-                "t20_frames": t20,
-                "rt60_ms": rt,
-            }
-        )
-    return pa.array(
-        out,
-        type=pa.struct(
-            [
-                ("status", pa.string()),
-                ("n_frames", pa.int64()),
-                ("last_active_frame", pa.int64()),
-                ("tail_frames", pa.int64()),
-                ("t20_frames", pa.int64()),
-                ("rt60_ms", pa.int64()),
-            ]
-        ),
-    )
+_reverb_udf = decoded_udf(_REVERB_T, with_sr(reverb_of))
 
 
-# one evaluation per row (the VAD/resample CollapseProject pin)
-_reverb_udf = _reverb_udf.asNondeterministic()
+def reverb_detected(status: Column, rt60_ms: Column) -> Column:
+    """status 'ok' and rt60_ms >= rules.REVERB_MAX_RT60_MS; keep is its
+    negation."""
+    return (status == "ok") & (rt60_ms >= rules.REVERB_MAX_RT60_MS)
 
 
 def reverb_screen(
@@ -150,23 +113,12 @@ def reverb_screen(
 ) -> DataFrame:
     """(clip_id, status, n_frames, last_active_frame, tail_frames,
     t20_frames, rt60_ms, reverb_detected, keep) — one row per decodable
-    clip; verdicts are JVM-side integer comparisons against
-    rules.REVERB_MAX_RT60_MS. Zero shuffles."""
+    clip; the verdict is reverb_detected. Zero shuffles."""
     e = clips.select(
         F.col(id_col).alias("clip_id"),
         _reverb_udf(F.col(bytes_col), F.col(codec_col), F.col(sr_col)).alias("r"),
     ).where(F.col("r").isNotNull())
-    rev = (F.col("r.status") == "ok") & (
-        F.col("r.rt60_ms") >= rules.REVERB_MAX_RT60_MS
-    )
+    rev = reverb_detected(F.col("r.status"), F.col("r.rt60_ms"))
     return e.select(
-        "clip_id",
-        F.col("r.status").alias("status"),
-        F.col("r.n_frames").alias("n_frames"),
-        F.col("r.last_active_frame").alias("last_active_frame"),
-        F.col("r.tail_frames").alias("tail_frames"),
-        F.col("r.t20_frames").alias("t20_frames"),
-        F.col("r.rt60_ms").alias("rt60_ms"),
-        rev.alias("reverb_detected"),
-        (~rev).alias("keep"),
+        "clip_id", "r.*", rev.alias("reverb_detected"), (~rev).alias("keep")
     )

@@ -22,7 +22,7 @@ The ratio stays an integer POWER ratio rather than a dB float — the
 ln-free determinism rule (BM25/DSIR lesson): 10x power IS 10 dB, and
 integer div is bit-equal in the replica.
 
-Boundary contract: ONE ArrowEvalPython stage (nondeterministic-pinned),
+Boundary contract: ONE ArrowEvalPython stage (functions/audio.decoded_udf),
 scalars out, zero shuffles. Reference lineage: the reference's
 SLIDINGWINDOW quality trim drops low-quality windows by mean phred —
 this is the clip-level aggregate of the same evidence, kept as a
@@ -32,12 +32,12 @@ REPORTED verdict (the stage_counts taxonomy) instead of a silent drop.
 from __future__ import annotations
 
 import numpy as np
-import pyarrow as pa
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import rules
+from ..functions.audio import decoded_udf, with_sr
 
 
 def snr_of(x: np.ndarray, sr: int):
@@ -75,49 +75,13 @@ _SNR_T = T.StructType(
     ]
 )
 
-
-@F.arrow_udf(_SNR_T)
-def _snr_udf(raw: pa.Array, codec: pa.Array, sr: pa.Array) -> pa.Array:
-    from ..functions.audio import _binary_bounds
-    from .audiodup import _decode_s16
-
-    data, starts, ends = _binary_bounds(raw)
-    codecs = codec.to_pylist()
-    srs = sr.to_pylist()
-    out = []
-    for i in range(len(codecs)):
-        x = _decode_s16(data, int(starts[i]), int(ends[i]), codecs[i])
-        if x is None or not srs[i] or srs[i] <= 0:
-            out.append(None)
-            continue
-        st, nsp, nnz, spm, nzm, ratio = snr_of(x, int(srs[i]))
-        out.append(
-            {
-                "status": st,
-                "n_speech_frames": nsp,
-                "n_noise_frames": nnz,
-                "speech_meansq": spm,
-                "noise_meansq": nzm,
-                "snr_ratio": ratio,
-            }
-        )
-    return pa.array(
-        out,
-        type=pa.struct(
-            [
-                ("status", pa.string()),
-                ("n_speech_frames", pa.int64()),
-                ("n_noise_frames", pa.int64()),
-                ("speech_meansq", pa.int64()),
-                ("noise_meansq", pa.int64()),
-                ("snr_ratio", pa.int64()),
-            ]
-        ),
-    )
+_snr_udf = decoded_udf(_SNR_T, with_sr(snr_of))
 
 
-# one evaluation per row (the VAD/resample CollapseProject pin)
-_snr_udf = _snr_udf.asNondeterministic()
+def snr_keep(status: Column, ratio: Column) -> Column:
+    """'clean' keeps, 'no_speech' and 'short' drop, 'ok' needs
+    snr_ratio >= SNR_MIN_RATIO (JVM-side integer comparison)."""
+    return (status == "clean") | ((status == "ok") & (ratio >= rules.SNR_MIN_RATIO))
 
 
 def snr_screen(
@@ -129,24 +93,13 @@ def snr_screen(
 ) -> DataFrame:
     """(clip_id, status, n_speech_frames, n_noise_frames, speech_meansq,
     noise_meansq, snr_ratio, keep) — one row per decodable clip; keep is
-    a JVM-side integer comparison (status='clean' keeps, 'no_speech' and
-    'short' drop, 'ok' needs snr_ratio >= SNR_MIN_RATIO). Zero
-    shuffles."""
+    snr_keep. Zero shuffles."""
     e = clips.select(
         F.col(id_col).alias("clip_id"),
         _snr_udf(F.col(bytes_col), F.col(codec_col), F.col(sr_col)).alias("s"),
     ).where(F.col("s").isNotNull())
-    keep = (F.col("s.status") == "clean") | (
-        (F.col("s.status") == "ok")
-        & (F.col("s.snr_ratio") >= rules.SNR_MIN_RATIO)
-    )
     return e.select(
         "clip_id",
-        F.col("s.status").alias("status"),
-        F.col("s.n_speech_frames").alias("n_speech_frames"),
-        F.col("s.n_noise_frames").alias("n_noise_frames"),
-        F.col("s.speech_meansq").alias("speech_meansq"),
-        F.col("s.noise_meansq").alias("noise_meansq"),
-        F.col("s.snr_ratio").alias("snr_ratio"),
-        keep.alias("keep"),
+        "s.*",
+        snr_keep(F.col("s.status"), F.col("s.snr_ratio")).alias("keep"),
     )

@@ -3888,8 +3888,9 @@ def corpus_card_q(spark, sf):
 
 @q("audio_screens")
 def audio_screens_q(spark, sf):
-    """Fused audio screen (operators/audioscreen.screen_audio): VAD +
-    SNR + pitch + mains-hum/DC + effective-bandwidth verdicts from ONE
+    """Fused audio screen (operators/audioscreen.screen_audio): all nine
+    screens' verdicts — VAD, SNR, pitch, mains-hum/DC, effective
+    bandwidth, reverb, dynamic range, dropout/stuck and click — from ONE
     decode — the decode-once fusion rule (audioprep) extended to the
     screen family; every column pytest-proven bit-identical to its
     standalone operator. Rows-only by necessity (binary PCM decode

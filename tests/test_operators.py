@@ -3241,6 +3241,91 @@ def test_snr_screen_matches_replica_and_plan(spark):
     assert not re.findall(r"\(\d+\) Exchange\b", p)
 
 
+# ------------------------------------------------- decode boundary ----
+
+
+def test_decode_s16_zero_sample_contract():
+    """functions/audio._decode_s16 never returns an empty array: every
+    zero-sample payload of every built-in codec decodes to None (the
+    decoded_udf kernels rely on this and never re-check len(x) == 0),
+    and a one-sample payload decodes to exactly one sample."""
+    import struct
+
+    import numpy as np
+
+    from kneaddata_spark.functions.audio import CODECS, CodecSpec, _decode_s16
+    from kneaddata_spark.functions.flaccodec import encode_flac
+    from kneaddata_spark.functions.oggopus import encode_ogg_opus
+
+    def dec(raw: bytes, codec: str):
+        data = np.frombuffer(raw, dtype=np.uint8) if raw else np.zeros(1, np.uint8)
+        return _decode_s16(data, 0, len(raw), codec)
+
+    def wav(pcm: bytes) -> bytes:
+        return (
+            b"RIFF" + struct.pack("<I", 36 + len(pcm)) + b"WAVEfmt "
+            + struct.pack("<IHHIIHH", 16, 1, 1, 16000, 32000, 2, 16)
+            + b"data" + struct.pack("<I", len(pcm)) + pcm
+        )
+
+    one = np.array([1234], dtype="<i2")
+    ogg = encode_ogg_opus(1)
+    ogg_headers = ogg[: ogg.index(b"OggS", ogg.index(b"OggS", 4) + 4)]  # no audio page
+    # codec -> (zero-sample header form, one-sample payload); raw pcm has
+    # no header, so its header form is the empty payload
+    cases = {
+        "pcm_s16le": (b"", one.tobytes()),
+        "pcm_u8": (b"", b"\x85"),
+        "wav": (wav(b""), wav(one.tobytes())),
+        "flac": (encode_flac(np.zeros(0, np.int16), 16000), encode_flac(one, 16000)),
+        "ogg_opus": (ogg_headers, ogg),
+    }
+    for c, spec in CODECS.items():
+        if spec.kind == "container_s16":
+            cases[c] = (
+                spec.magic + struct.pack("<I", 0),
+                spec.magic + struct.pack("<I", 2) + one.tobytes(),
+            )
+    builtin = {
+        c for c, spec in CODECS.items()
+        if spec.kind != "python" or spec.decode.__module__.startswith("kneaddata_spark")
+    }
+    assert builtin == set(cases)
+    for c, (header, valid) in cases.items():
+        assert dec(b"", c) is None, c
+        assert dec(header, c) is None, c
+        if c != "pcm_u8":  # one byte IS one pcm_u8 sample
+            assert dec(b"\x07", c) is None, c
+        x = dec(valid, c)
+        assert x is not None and x.dtype == np.int16 and len(x) == 1, c
+    # a registered decoder that returns an empty array is also None
+    CODECS["_empty_decoder"] = CodecSpec("python", decode=lambda raw: np.zeros(0, np.int16))
+    try:
+        assert dec(b"\x00\x00", "_empty_decoder") is None
+    finally:
+        del CODECS["_empty_decoder"]
+
+
+def test_decode_loop_lives_only_in_functions_audio():
+    """Every per-clip decode operator builds its UDF with
+    functions/audio.decoded_udf: no other module calls _decode_s16( or
+    _binary_bounds( (a hand-rolled copy of the decode loop)."""
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "kneaddata_spark"
+    home = root / "functions" / "audio.py"
+    assert "def _decode_s16(" in home.read_text()
+    assert "def _binary_bounds(" in home.read_text()
+    offenders = [
+        f"{p.relative_to(root)}: {tok}"
+        for p in sorted(root.rglob("*.py"))
+        if p != home
+        for tok in ("_decode_s16(", "_binary_bounds(")
+        if tok in p.read_text()
+    ]
+    assert offenders == []
+
+
 # ------------------------------------------------- fused audio screen ----
 
 
@@ -3263,8 +3348,26 @@ def test_screen_audio_fusion_equals_standalones(spark):
     from kneaddata_spark.synth import clips_spark_df
     from tools.audit_plans import plan_of
 
-    clips = clips_spark_df(spark, 150, n_partitions=4)
+    import numpy as np
+
+    two = np.array([900, -900], dtype="<i2").tobytes()
+    zero = np.zeros(1600, dtype="<i2").tobytes()
+    # edge rows: the one decode/sr guard must act alike in every screen
+    edge = spark.createDataFrame(
+        [
+            ("edge_null", None, 16000, 100, "pcm_s16le", "x"),
+            ("edge_codec", two, 16000, 100, "no_such_codec", "x"),
+            ("edge_sr0", zero, 0, 100, "pcm_s16le", "x"),
+            ("edge_short", two, 16000, 100, "pcm_s16le", "x"),  # click: short
+            ("edge_silent", zero, 16000, 100, "pcm_s16le", "x"),  # click: silent
+        ],
+        "clip_id string, bytes binary, sr_hz int, dur_ms int, codec string, "
+        "transcript string",
+    )
+    clips = clips_spark_df(spark, 150, n_partitions=4).unionByName(edge)
     fused = {r["clip_id"]: r.asDict() for r in screen_audio(clips).collect()}
+    assert {"edge_short", "edge_silent"} <= set(fused)
+    assert not {"edge_null", "edge_codec", "edge_sr0"} & set(fused)
     snr = {r["clip_id"]: r.asDict() for r in snr_screen(clips).collect()}
     pit = {r["clip_id"]: r.asDict() for r in pitch_screen(clips).collect()}
     hum = {r["clip_id"]: r.asDict() for r in hum_screen(clips).collect()}

@@ -164,7 +164,8 @@ AUDIT = [
     # r4e: corpus card — one combinable agg (count_distinct expand = 2
     # shuffles), zero Python
     ("corpus_card", {"max_exchanges": 2, "no_python": True}),
-    # r4e: fused audio screen — VAD+SNR+pitch from ONE decode stage
+    # r4e: fused audio screen — all nine screens (VAD, SNR, pitch, hum/DC,
+    # bandwidth, reverb, dynamic range, dropout, click) from ONE decode stage
     ("audio_screens", {"max_exchanges": 0, "arrow_only": True}),
     # r4e: gaps-and-islands code-switch runs — ONE doc-keyed shuffle
     # (windows + running sum + groupBy all reuse the doc_id clustering)
@@ -217,6 +218,15 @@ AUDIT = [
     # r4f: PQ ANN — encode + query LUT are Arrow-batched matmuls; ADC
     # scoring is a JVM fold over the code array on the broadcast-NL side
     ("ann_pq_topk", {"broadcast_join": True}),
+    # per-clip decode screens and stats (functions/audio.decoded_udf): ONE
+    # Arrow decode stage, zero shuffles
+    ("hum_screen", {"max_exchanges": 0, "arrow_only": True}),
+    ("dropout_screen", {"max_exchanges": 0, "arrow_only": True}),
+    ("click_screen", {"max_exchanges": 0, "arrow_only": True}),
+    ("reverb_screen", {"max_exchanges": 0, "arrow_only": True}),
+    ("dynrange_screen", {"max_exchanges": 0, "arrow_only": True}),
+    ("bandwidth_screen", {"max_exchanges": 0, "arrow_only": True}),
+    ("declip_stats", {"max_exchanges": 0, "arrow_only": True}),
 ]
 
 
